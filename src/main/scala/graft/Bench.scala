@@ -77,11 +77,24 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
 
-  /** One timed execution: (wallSec, cpuSec, gcMs, ok). */
+  /** Janino compiles so far in this JVM and their total time in ns —
+    * the codegen layer of a query's cost (each compile is a miss in
+    * Spark's generated-class cache). */
+  private def codegenStats: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime)
+
+  /** One timed execution. */
+  private final case class Timing(wall: Double, cpu: Double, gcMs: Long,
+      compiles: Long, compileMs: Long, ok: Boolean)
+
   private def timeOnce(spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      name: String): (Double, Double, Long, Boolean) = {
+      name: String): Timing = {
     val (_, gcMs0) = gcStats
+    val (compiles0, compileNs0) = codegenStats
     val cpu0 = processCpuNs
     val t0 = System.nanoTime()
     val ok =
@@ -98,7 +111,9 @@ object Bench {
     val cpu1 = processCpuNs
     val cpu = if (cpu0 < 0 || cpu1 < 0) -1.0 else (cpu1 - cpu0) / 1e9
     val (_, gcMs1) = gcStats
-    (wall, cpu, gcMs1 - gcMs0, ok)
+    val (compiles1, compileNs1) = codegenStats
+    Timing(wall, cpu, gcMs1 - gcMs0, compiles1 - compiles0,
+      (compileNs1 - compileNs0) / 1000000, ok)
   }
 
   def main(args: Array[String]): Unit = {
@@ -195,7 +210,7 @@ object Bench {
     // the end-of-run post pass — otherwise the outlier flag and all
     // burst evidence vanish and it reads like a never-suspect query
     case class QRes(name: String, wall: Double, cpu: Double, gcMs: Long,
-      ok: Boolean, retryAttempted: Boolean,
+      compiles: Long, compileMs: Long, ok: Boolean, retryAttempted: Boolean,
       retry: Option[(Double, Double)], buildPayer: Boolean,
       retrySkipped: Boolean)
     val seenFamilies = scala.collection.mutable.Set.empty[String]
@@ -213,6 +228,12 @@ object Bench {
         if (only.nonEmpty) "bench_detail_partial.json"
         else if (cpus == 32) "bench_detail.json"
         else s"bench_detail_c$cpus.json"))
+    // per-query codegen layer, parallel to the wall and cpu maps
+    def codegenMaps(done: Seq[QRes]): String = {
+      def m(f: QRes => Long) =
+        done.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+      s""""codegenCompiles":${m(_.compiles)},"codegenMs":${m(_.compileMs)}"""
+    }
     def flushPrefix(done: Seq[QRes]): Unit = try {
       val qs = done.map { r =>
         "\"" + r.name + "\":" + (if (r.ok) r.wall.toString else "null") }
@@ -223,7 +244,8 @@ object Bench {
       val tot = done.collect { case r if r.ok => r.wall }.sum
       java.nio.file.Files.write(detailPath,
         (s"""{"metric":"total","value":$tot,"unit":"sec","n":${done.size},""" +
-          s""""queries":$qs,"cpu":$cs,"partial":true,"sf":"$sfDir"}""" + "\n")
+          s""""queries":$qs,"cpu":$cs,${codegenMaps(done)},""" +
+          s""""partial":true,"sf":"$sfDir"}""" + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     } catch { case _: Throwable => () }
     val (results, postRetry) =
@@ -241,17 +263,19 @@ object Bench {
         } else {
         val buildPayer = familyDefs.find(_._2(name))
           .exists(f => seenFamilies.add(f._1))
-        val (wall, cpu, gcMs, ok) = timeOnce(spark, sfDir, fn, name)
+        val Timing(wall, cpu, gcMs, compiles, compileMs, ok) =
+          timeOnce(spark, sfDir, fn, name)
         // progress line per query: a run that dies or stalls mid-fleet
         // still leaves a per-query trail with the memory-pressure signal
         System.err.println(
           f"[bench] $name%-28s ${wall}%8.2fs cpu=${cpu}%7.2fs " +
-            f"heapUsed=${heapUsedMb}%dMB gc=+${gcMs}%dms")
+            f"heapUsed=${heapUsedMb}%dMB gc=+${gcMs}%dms " +
+            f"codegen=$compiles%d/$compileMs%dms")
         val suspect = ok && history.get(name).exists(h =>
           wall > retryFactor * math.max(h, 1.0)) && wall > 5.0
         val overBudget = retrySpentSec >= retryBudgetSec
         val retry = if (suspect && !overBudget) {
-          val (w2, c2, _, ok2) = timeOnce(spark, sfDir, fn, name)
+          val Timing(w2, c2, _, _, _, ok2) = timeOnce(spark, sfDir, fn, name)
           retrySpentSec += w2
           val cpuVsHist = cpuHistory.get(name)
             .filter(_ > 0).map(h => c2 / h)
@@ -269,8 +293,8 @@ object Bench {
               f"$retryBudgetSec%.0fs exhausted: $retrySpentSec%.1fs spent)")
           None
         }
-        acc += QRes(name, wall, cpu, gcMs, ok, suspect, retry, buildPayer,
-          suspect && overBudget)
+        acc += QRes(name, wall, cpu, gcMs, compiles, compileMs, ok, suspect,
+          retry, buildPayer, suspect && overBudget)
         flushPrefix(acc.toSeq)
         }
       }
@@ -286,7 +310,7 @@ object Bench {
       val post = base.collect { case r if r.retryAttempted &&
           retrySpentSec < retryBudgetSec &&
           !deadlineSec.exists(d => fleetElapsedSec > d) =>
-        val (w3, c3, _, ok3) =
+        val Timing(w3, c3, _, _, _, ok3) =
           timeOnce(spark, sfDir, SparkEntry.queries(r.name), r.name)
         retrySpentSec += w3
         System.err.println(
@@ -389,7 +413,8 @@ object Bench {
         s""""jvm":$jvm,$truncBlock,"sf":"$sfDir"}"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        f""""cpu":$cpuMap,"cpuTotal":$totalCpu%.1f,"retried":$retried,""" +
+        s""""cpu":$cpuMap,${codegenMaps(results)},""" +
+        f""""cpuTotal":$totalCpu%.1f,"retried":$retried,""" +
         s""""failed":$failed,"families":$families,"jvm":$jvm,""" +
         s"""$truncBlock,"sf":"$sfDir"}"""
     println(summary)

@@ -13,6 +13,10 @@ import org.apache.spark.sql.SparkSession
   *    coalesce down (each post-coalesce task should hold ~128–256 MB).
   *  - Session timezone pinned UTC — timestamp arithmetic must not
   *    depend on host configuration (and the DuckDB oracle agrees).
+  *  - Spark's generated-class cache sized to the registry's working set
+  *    ([[CodegenCacheEntries]]). It is a static conf: a cluster submit
+  *    must carry `spark.sql.codegen.cache.maxEntries` too, or every
+  *    warm run recompiles what Spark's default of 100 evicted.
   *
   * Cluster-only knobs intentionally NOT set here (site-specific, listed
   * for the submit script): executor memory/cores, shuffle service,
@@ -22,6 +26,18 @@ import org.apache.spark.sql.SparkSession
   * state.
   */
 object Engine {
+
+  /** `spark.sql.codegen.cache.maxEntries`. Spark 4.1 keys the cache by
+    * (context classloader, generated source); at the default of 100 a
+    * repeated run of the same pipelines recompiles most of its classes
+    * and the JIT compiles the new ones again. One Verify pass over all
+    * 439 pipelines at sf0.01, with the cache unbounded, compiles 7,177
+    * distinct classes (97 s of Janino compile time); 8,192 holds
+    * them all with 14 % headroom. Stream replays still compile per
+    * batch: their watermark literals change the generated source.
+    */
+  val CodegenCacheEntries: Int = 8192
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
@@ -36,6 +52,8 @@ object Engine {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
     // Fork-free local FS (see graft.io.ForklessLocalFs): without
     // libhadoop every create/mkdirs forks `chmod` — a two-batch
     // streaming replay fires ~4,600 forks and the q_stream_* family's

@@ -21,7 +21,10 @@ object Graft {
     * splitting), shuffle partitions sized to cores (not 200), UTC, and
     * the engine's native functions registered. On a cluster, pass the
     * same settings via spark-submit conf plus
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
+    * `spark.sql.extensions=graft.functions.GraftExtensions`. The submit
+    * must carry the static `spark.sql.codegen.cache.maxEntries` as well
+    * ([[Engine.CodegenCacheEntries]] = 8192; one Verify pass over the
+    * registry compiles 7,177 distinct generated classes).
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
               shufflePartitions: Option[Int] = None): SparkSession = {

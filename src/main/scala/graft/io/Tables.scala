@@ -1,8 +1,13 @@
 package graft.io
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Canonical loaders for the driver-generated fixture tables
   * (`/root/repo/TESTDATA.md`). The reference treats data files as untyped
@@ -10,6 +15,19 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * engine's analog of its "bucket" is a scale-factor directory of Parquet
   * tables, loaded lazily so Catalyst sees the full plan (pushdown + pruning
   * reach the scan).
+  *
+  * Schema memo: a parquet read without a schema runs one single-task
+  * Spark job to read the file's footer (70–96 ms against 6–10 ms with
+  * `.schema(s)`, sf0.1 fixtures on a 4-vCPU host). The first read of a file in a session infers
+  * as usual; later reads pass the inferred schema back. An entry is keyed
+  * by every input the inferred schema depends on:
+  *   - the path, the file's length and its modification time — a file
+  *     rewritten in place is inferred again;
+  *   - the session's `spark.sql.parquet.*` and
+  *     `spark.sql.legacy.parquet.*` values (the events loader sets
+  *     `nanosAsLong`, which changes the inferred type of `ts`).
+  * Directory paths bypass the memo. Entries live per session and are
+  * dropped when the session's SparkContext stops.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +36,58 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, s"$dir/$name.parquet")
+
+  private final case class SchemaKey(path: String, length: Long,
+      modified: Long, parquetConf: Map[String, String])
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[SchemaKey, StructType]]()
+  private val releasing =
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  private def schemaMemo(spark: SparkSession)
+      : ConcurrentHashMap[SchemaKey, StructType] = schemas.synchronized {
+    val sc = spark.sparkContext
+    if (releasing.add(sc)) sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+        schemas.synchronized {
+          schemas.keySet.removeIf(_.sparkContext eq sc): Unit
+        }
+    })
+    schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+  }
+
+  /** `spark.read.parquet(path)` through the session's schema memo (see
+    * the object scaladoc for the key contract). */
+  private[io] def readParquet(spark: SparkSession, path: String)
+      : DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    // a missing path or a glob falls through to the plain read, which
+    // raises Spark's own error for it
+    val file = scala.util.Try(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)).toOption.filter(_.isFile)
+    file.fold(spark.read.parquet(path)) { st =>
+      val parquetConf = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val key = SchemaKey(path, st.getLen, st.getModificationTime,
+        parquetConf)
+      val memo = schemaMemo(spark)
+      Option(memo.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          memo.put(key, df.schema)
+          df
+      }
+    }
+  }
 
   /** OPT-IN scale-adaptive scan parallelization (optimization guide
     * §2.2/§6) — the `…Par` loaders below.
@@ -119,7 +188,7 @@ object Tables {
   private[io] def eventsRawRead(spark: SparkSession, path: String): DataFrame = {
     if (footerTsIsNanos(spark, path))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path)
+    readParquet(spark, path)
   }
 
   /** Driver-side footer probe: does `ts` in `path` (one parquet file, or

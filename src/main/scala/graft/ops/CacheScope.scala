@@ -126,7 +126,7 @@ object CacheScope {
       case _ => memoized(key)(build)
     }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }

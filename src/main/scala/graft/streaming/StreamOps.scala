@@ -42,13 +42,27 @@ object StreamOps {
     * that IO dominates small runs. Durable pipelines must point
     * checkpoints at reliable storage instead; this is for
     * run-and-discard evaluation only.
+    *
+    * All of them sit under one root per JVM, deleted by a shutdown hook
+    * that runs after Spark's own (SparkContext stop) and before Hadoop
+    * closes its file systems. A returned frame may still read its dir
+    * lazily, so nothing is deleted earlier.
     */
-  def scratchDir(prefix: String): java.nio.file.Path = {
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+
+  private lazy val scratchRoot: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
+    val root =
+      if (java.nio.file.Files.isDirectory(shm) &&
+          java.nio.file.Files.isWritable(shm))
+        java.nio.file.Files.createTempDirectory(shm, "graft-scratch-")
+      else java.nio.file.Files.createTempDirectory("graft-scratch-")
+    // Hadoop runs higher priorities first: Spark's hooks sit at 40, the
+    // FileSystem cache closes at 10
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => graft.ops.CacheScope.deleteRecursively(root.toFile), 20)
+    root
   }
 
   /** Stream-static (dimension) enrichment join — the canonical streaming

@@ -131,4 +131,11 @@ class StreamOpsSpec extends SparkTestBase {
   implicit private class Map2[A, B, C](rows: Array[(A, B, C)]) {
     def toMap2: Map[A, (B, C)] = rows.map(r => r._1 -> ((r._2, r._3))).toMap
   }
+
+  test("scratch dirs share one per-JVM root") {
+    val a = StreamOps.scratchDir("spec_a")
+    val b = StreamOps.scratchDir("spec_b")
+    assert(a.getParent == b.getParent && a != b)
+    assert(a.getParent.getFileName.toString.startsWith("graft-scratch-"))
+  }
 }
